@@ -16,8 +16,8 @@ import graft.operators.{ConnectedComponents, Dedup}
   * components, never split them (edges are never retracted). So a batch's
   * entire effect on the partition is captured by the CONTRACTED graph — map
   * each batch endpoint to its current component label and connect those
-  * labels. Running the full star-iteration operator on that contracted
-  * relation (≤ 2·|batch| nodes, independent of the accumulated graph) yields
+  * labels. Running connected components on that contracted relation
+  * (≤ 2·|batch| nodes, independent of the accumulated graph) yields
   * exactly the label merges the batch causes; everything else is label
   * substitution.
   *
@@ -31,16 +31,44 @@ import graft.operators.{ConnectedComponents, Dedup}
   * Per-batch cost at scale: one STREAMED pass of the assignment through a
   * left-semi endpoint lookup whose build side is the batch's node set (the
   * assignment is never the build side and never shuffles — see the
-  * build-side note in [[delta]]), a star iteration over the contracted
-  * graph (tiny for steady-state batches; gracefully degrades to the full
-  * operator's cost when the "batch" IS the corpus, e.g. a bulk load), and
-  * one label-substitution join against the assignment keyed on `component`
-  * — the remap side is ≤ 2·|batch| rows, which Catalyst's size estimation
-  * (or AQE at runtime) broadcasts for steady-state batches, leaving the
-  * assignment unshuffled; the full scan of the assignment is the price of a
-  * MATERIALIZED assignment (the alternative — folding remap deltas at read
-  * time, which the streaming driver's persisted layout does between
-  * compactions — trades it for read amplification).
+  * build-side note in [[delta]]), connected components over the contracted
+  * graph, and one label-substitution join against the assignment keyed on
+  * `component` — the remap side is ≤ 2·|batch| rows, which Catalyst's size
+  * estimation (or AQE at runtime) broadcasts for steady-state batches,
+  * leaving the assignment unshuffled; the full scan of the assignment is the
+  * price of a MATERIALIZED assignment (the alternative — folding remap
+  * deltas at read time, which the streaming driver's persisted layout does
+  * between compactions — trades it for read amplification).
+  *
+  * The contraction's components come from one of two operators, chosen by a
+  * property of the input, not by a setting:
+  *  - GROUPED (`groupCol` given): the edges carry a key expected to
+  *    partition the graph — every node has exactly one key value and no
+  *    edge spans two. The linkage match graph has this by construction (one
+  *    `block_key` per url, pairs only inside a block; the precondition
+  *    [[graft.operators.Linkage.entitiesFrom]] states). The property carries
+  *    over to the contracted graph: a node's label is its component's
+  *    minimum member, which lies in the node's own group, so every
+  *    contracted edge stays inside the group of the edge it lifts. One hash
+  *    exchange plus an in-task union-find per group
+  *    ([[ConnectedComponents.runGrouped]]) then yields the same components
+  *    as the star iteration in a single pass, without the iteration's
+  *    per-round checkpoint and convergence-fingerprint jobs — the per-job
+  *    overhead that dominates a small micro-batch. String node ids only
+  *    (runGrouped's contract). The key is a speed hint, not a correctness
+  *    precondition: a batch whose contracted graph puts a node under two
+  *    keys (a url re-delivered under another block key, or a component
+  *    that earlier such a url merged across blocks) is detected on
+  *    runGrouped's materialized output — a node in k groups comes back k
+  *    times — and that batch falls back to the star iteration.
+  *  - GENERIC (no key): the alternating-star iteration
+  *    ([[ConnectedComponents.run]]) over the contracted graph — any node
+  *    type, any graph (e.g. LSH pair edges, where one doc joins several
+  *    buckets). Tiny for steady-state batches; degrades gracefully to the
+  *    full operator's cost when the "batch" IS the corpus (a bulk load).
+  * IncrementalCcSpec proves both paths equal the full recompute on the
+  * url-hash-split linkage composition, and the grouped one on a url that
+  * comes back under another block key.
   *
   * Unlike the dedup states there is NO disjointness precondition: edges may
   * be re-delivered, duplicate, span batches arbitrarily, or connect nodes
@@ -69,9 +97,9 @@ object IncrementalCC {
     * retired by merges (`remap`: old label → merged label) and first-seen
     * nodes under their merged labels (`fresh`). [[applyDelta]] folds it into
     * any assignment; the streaming driver persists exactly these two frames
-    * per batch. */
-  case class Delta(remap: DataFrame, fresh: DataFrame,
-                   labelsRetired: Long, newNodes: Long)
+    * per batch. Both frames are materialized: `fresh` is checkpointed and
+    * `remap` filters the checkpointed components. */
+  case class Delta(remap: DataFrame, fresh: DataFrame)
 
   /** One incremental step: fold `edges` (src, dst) into the `prev`
     * assignment. Returns the updated assignment plus merge/insert counts.
@@ -84,12 +112,27 @@ object IncrementalCC {
     * of [[ConnectedComponents.run]]/`runOnStrings` or of this step). */
   def step(prev: DataFrame, edges: DataFrame): Step = {
     val d = delta(prev, edges)
-    Step(applyDelta(prev, d), d.labelsRetired, d.newNodes)
+    // observability counts folded into one action over the checkpointed
+    // (already materialized) delta frames
+    val r = d.remap.agg(count(lit(1)).as("m"))
+      .crossJoin(d.fresh.agg(count(lit(1)).as("n"))).head()
+    Step(applyDelta(prev, d), r.getLong(0), r.getLong(1))
   }
 
-  /** The batch increment against the `prev` assignment (see [[step]]). */
-  def delta(prev: DataFrame, edges: DataFrame): Delta = {
-    val e = edges.select(col("src"), col("dst")).filter(col("src") =!= col("dst"))
+  /** The batch increment against the `prev` assignment (see [[step]]).
+    *
+    * @param groupCol a column of `edges` expected to partition the graph
+    *                 (the GROUPED path in the object doc); None = any graph */
+  def delta(prev: DataFrame, edges: DataFrame,
+            groupCol: Option[String] = None): Delta = {
+    groupCol.foreach { g =>
+      require(edges.schema("src").dataType == org.apache.spark.sql.types.StringType,
+        s"grouped fold (groupCol = $g) needs string node ids, as " +
+          "ConnectedComponents.runGrouped does; fold other ids without a group")
+    }
+    val g = groupCol.toSeq.map(col)
+    val e = edges.select(g ++ Seq(col("src"), col("dst")): _*)
+      .filter(col("src") =!= col("dst"))
 
     // current component of every batch endpoint; a first-seen node is its
     // own component. Persisted: feeds the contraction (twice) and the
@@ -108,37 +151,49 @@ object IncrementalCC {
           .select(col("id"), col("id").as("comp0"), lit(false).as("existed"))))
 
     // the contracted graph: batch edges lifted to component labels; an edge
-    // inside one existing component contracts to a dropped self-loop
+    // inside one existing component contracts to a dropped self-loop. A
+    // lifted edge keeps the group of the edge it lifts (the labels lie in
+    // that group — see the object doc).
     val compEdges = e
       .join(looked.select(col("id").as("src"), col("comp0").as("ca")), "src")
       .join(looked.select(col("id").as("dst"), col("comp0").as("cb")), "dst")
-      .select(col("ca").as("src"), col("cb").as("dst"))
+      .select(g ++ Seq(col("ca").as("src"), col("cb").as("dst")): _*)
       .filter(col("src") =!= col("dst"))
 
-    // star iteration on ≤ 2·|batch| contracted nodes; labels that survive
+    // components of the ≤ 2·|batch| contracted nodes; labels that survive
     // map to themselves and need no remap row.
-    // localCheckpoint (EAGER) on both O(batch) delta frames, not a mere
+    // localCheckpoint (EAGER) on the components and on `fresh`, not a mere
     // persist: the fold's lineage embeds `prev` through looked/found, so an
     // un-truncated assignment would carry the whole prior fold's plan
     // multiple times PER STEP — exponential logical-plan growth that OOMs
     // plan-string generation after a handful of batches (caught by the
     // 5-seed fold test). Checkpointed, each step adds one join + one union.
-    val remap = ConnectedComponents.run(compEdges)
+    val comps = groupCol match {
+      case Some(gc) => groupedComponents(compEdges, gc)
+      case None     => ConnectedComponents.run(compEdges).localCheckpoint()
+    }
+    val remap = comps
       .filter(col("id") =!= col("component"))
       .select(col("id").as("component"), col("component").as("newComp"))
-      .localCheckpoint()
 
     val fresh = looked.filter(!col("existed"))
       .join(remap.withColumnRenamed("component", "comp0"), Seq("comp0"), "left")
       .select(col("id"),
         coalesce(col("newComp"), col("comp0")).as("component"))
       .localCheckpoint()
+    Delta(remap, fresh)
+  }
 
-    // observability counts folded into one action over the checkpointed
-    // (already materialized) delta frames
-    val r = remap.agg(count(lit(1)).as("m"))
-      .crossJoin(fresh.agg(count(lit(1)).as("n"))).head()
-    Delta(remap, fresh, r.getLong(0), r.getLong(1))
+  /** Components of the contracted graph by the grouped union-find, exact
+    * while no contracted node lies in two groups. Checked in one job on its
+    * checkpointed output (a node in k groups comes back k times); on a
+    * violation the batch falls back to the star iteration. */
+  private def groupedComponents(compEdges: DataFrame, gc: String): DataFrame = {
+    val comps = ConnectedComponents.runGrouped(compEdges, gc).localCheckpoint()
+    val split = comps.rdd.map(r => (r.getString(0), 1)).reduceByKey(_ + _)
+      .filter(_._2 > 1).count()
+    if (split == 0) comps
+    else ConnectedComponents.run(compEdges.drop(gc)).localCheckpoint()
   }
 
   /** Label substitution over the assignment (the remap side is ≤ 2·|batch|
@@ -227,31 +282,34 @@ object IncrementalCC {
 
   /** Assignment state before `beforeBatch`: the last compacted assignment
     * (empty when none) with every later committed delta folded in ascending
-    * batch order — ≤ compactEvery−1 chained substitutions per read. */
+    * batch order — ≤ compactEvery−1 chained substitutions per read. Every
+    * dir is read with its known schema: parquet schema inference would
+    * launch one footer-reading job per dir. */
   def loadAssign(spark: org.apache.spark.sql.SparkSession, stateDir: String,
                  beforeBatch: Long, stringIds: Boolean = false): DataFrame = {
     val base = ccCompactions(stateDir).filter(_ < beforeBatch).lastOption
     val live = ccCommittedBatches(stateDir)
       .filter(b => b < beforeBatch && base.forall(b > _))
+    def read(name: String, cols: String*) =
+      spark.read.schema(idSchema(stringIds, cols: _*)).parquet(s"$stateDir/$name")
     val start = base match {
-      case Some(c) => spark.read.parquet(s"$stateDir/$AssignP$c")
-      case None => emptyAssign(spark, stringIds)
+      case Some(c) => read(s"$AssignP$c", "id", "component")
+      case None => spark.createDataFrame(
+        new java.util.ArrayList[org.apache.spark.sql.Row](),
+        idSchema(stringIds, "id", "component"))
     }
     live.foldLeft(start) { (assign, b) =>
-      applyDelta(assign, Delta(
-        spark.read.parquet(s"$stateDir/$RemapP$b"),
-        spark.read.parquet(s"$stateDir/$FreshP$b"), 0L, 0L))
+      applyDelta(assign, Delta(read(s"$RemapP$b", "component", "newComp"),
+        read(s"$FreshP$b", "id", "component")))
     }
   }
 
-  private def emptyAssign(spark: org.apache.spark.sql.SparkSession,
-                          stringIds: Boolean): DataFrame = {
+  /** A state dir's schema: every column a node id (string or long). */
+  private def idSchema(stringIds: Boolean, cols: String*) = {
     val t = if (stringIds) org.apache.spark.sql.types.StringType
             else org.apache.spark.sql.types.LongType
-    spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id", t),
-        org.apache.spark.sql.types.StructField("component", t))))
+    org.apache.spark.sql.types.StructType(
+      cols.map(org.apache.spark.sql.types.StructField(_, t)))
   }
 
   private def gcSuperseded(stateDir: String, currentBatch: Long): Unit =
@@ -267,20 +325,22 @@ object IncrementalCC {
     }
 
   /** The per-batch persisted-state body (shared by [[run]] and composed
-    * drivers — [[IncrementalLinkage.run]]'s `entityStateDir`): GC superseded
-    * state, load the assignment, fold the batch's edges, write the O(delta)
-    * remap/fresh deltas, compact on cadence. Deterministic given the same
-    * prior state, so a re-delivered batch (caller's checkpoint crashed
-    * mid-commit) overwrites its own dirs byte-compatibly. */
+    * drivers — [[IncrementalLinkage.run]]'s `entityStateDir`, which passes
+    * `block_key` as `groupCol`): GC superseded state, load the assignment,
+    * fold the batch's edges, write the O(delta) remap/fresh deltas, compact
+    * on cadence. Deterministic given the same prior state, so a re-delivered
+    * batch (caller's checkpoint crashed mid-commit) overwrites its own dirs
+    * byte-compatibly. */
   private[streaming] def persistCcStep(sp: org.apache.spark.sql.SparkSession,
       stateDir: String, batchId: Long, edges: DataFrame,
-      stringIds: Boolean, compactEvery: Int): Unit = {
+      stringIds: Boolean, compactEvery: Int,
+      groupCol: Option[String] = None): Unit = {
     gcSuperseded(stateDir, batchId)
     // pinned: the delta's endpoint lookup AND a compaction batch's folded
     // write both read the assignment fold (base parquet + up to
     // compactEvery-1 substitution joins) — unpersisted it would execute twice
     val prev = Dedup.trackPersist(loadAssign(sp, stateDir, batchId, stringIds))
-    val d = delta(prev, edges)
+    val d = delta(prev, edges, groupCol)
     d.remap.write.mode("overwrite").parquet(s"$stateDir/$RemapP$batchId")
     d.fresh.write.mode("overwrite").parquet(s"$stateDir/$FreshP$batchId")
     val base = ccCompactions(stateDir).filter(_ < batchId).lastOption

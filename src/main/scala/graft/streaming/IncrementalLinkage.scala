@@ -1,8 +1,9 @@
 package graft.streaming
 
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.{Linkage, Scoring}
@@ -48,10 +49,16 @@ object IncrementalLinkage {
     * keys, and the re-scored pairs of the touched blocks. */
   case class Delta(bPrep: DataFrame, changed: DataFrame, rescored: DataFrame)
 
-  /** Compute one batch's delta against the accumulated prepared state. */
+  /** Compute one batch's delta against the accumulated prepared state.
+    * `bPrep` comes back PERSISTED (session-tracked: `Dedup.releaseCaches`
+    * or the caller's unpersist frees it): the candidate-pair join's
+    * measured-bytes probe runs here and reads the batch's prepared rows
+    * twice (the touched-block keys and the union); persisted first, a batch
+    * is prepared once instead of twice in the probe and a third time at its
+    * first write. */
   def delta(prevPrepared: DataFrame, batch: DataFrame,
             cfg: Linkage.Config = Linkage.Config()): Delta = {
-    val bPrep = Linkage.prepare(batch, cfg)
+    val bPrep = graft.operators.Dedup.trackPersist(Linkage.prepare(batch, cfg))
     val changed = bPrep.select("block_key").distinct()
     // records that participate in re-pairing: the batch + every existing
     // record in a touched block (left-semi: key-colocated probe, no payload)
@@ -67,6 +74,8 @@ object IncrementalLinkage {
 
   /** One incremental step with in-memory state (the batch-equality surface;
     * the streaming driver below persists deltas instead of merged state).
+    * Like [[delta]], it leaves the batch's prepared rows persisted and
+    * session-tracked; `Dedup.releaseCaches` frees them.
     *
     * @param prevPrepared accumulated prepared records (empty on first batch)
     * @param prevScored   accumulated scored pairs (empty on first batch)
@@ -93,6 +102,16 @@ object IncrementalLinkage {
     import spark.implicits._
     spark.emptyDataset[graft.operators.ScoredPair].toDF()
   }
+
+  // Known schemas of the state dirs. Reads pass them to `spark.read`:
+  // parquet schema inference launches one footer-reading job per read.
+  // (A file source reads every column as nullable whatever the schema says.)
+  private def preparedSchema(spark: SparkSession, cfg: Linkage.Config): StructType =
+    Linkage.prepare(emptyPages(spark), cfg).schema
+  private val scoredSchema: StructType =
+    Encoders.product[graft.operators.ScoredPair].schema
+  private val changedSchema: StructType =
+    StructType(Seq(StructField("block_key", StringType)))
 
   // ----------------------------- state layout ------------------------------
 
@@ -138,8 +157,11 @@ object IncrementalLinkage {
                         cfg: Linkage.Config = Linkage.Config()): DataFrame = {
     val bs = liveBatches(stateDir, beforeBatch)
     if (bs.isEmpty) Linkage.prepare(emptyPages(spark), cfg)
-    else bs.map(b => spark.read.parquet(s"$stateDir/prepared_delta_$b"))
-      .reduce(_ unionByName _)
+    else {
+      val schema = preparedSchema(spark, cfg)
+      bs.map(b => spark.read.schema(schema).parquet(s"$stateDir/prepared_delta_$b"))
+        .reduce(_ unionByName _)
+    }
   }
 
   /** Accumulated scored state before `beforeBatch`: last-touch merge — a
@@ -151,10 +173,12 @@ object IncrementalLinkage {
                       beforeBatch: Long = Long.MaxValue): DataFrame = {
     val bs = liveBatches(stateDir, beforeBatch)
     if (bs.isEmpty) return emptyScored(spark)
-    val pairs = bs.map(b => spark.read.parquet(s"$stateDir/scored_delta_$b")
-      .withColumn("batch", lit(b))).reduce(_ unionByName _)
-    val changed = bs.map(b => spark.read.parquet(s"$stateDir/changed_$b")
-      .withColumn("batch", lit(b))).reduce(_ unionByName _)
+    val pairs = bs.map(b => spark.read.schema(scoredSchema)
+      .parquet(s"$stateDir/scored_delta_$b").withColumn("batch", lit(b)))
+      .reduce(_ unionByName _)
+    val changed = bs.map(b => spark.read.schema(changedSchema)
+      .parquet(s"$stateDir/changed_$b").withColumn("batch", lit(b)))
+      .reduce(_ unionByName _)
     val lastTouch = changed.groupBy("block_key").agg(max(col("batch")).as("batch"))
     pairs.join(lastTouch, Seq("block_key", "batch")).drop("batch")
   }
@@ -230,7 +254,20 @@ object IncrementalLinkage {
     * scoring is deterministic over immutable records: a touched block
     * re-emits its old matches verbatim (idempotent no-ops for the CC fold)
     * and never retracts one. Query the maintained entities with
-    * [[IncrementalCC.loadAssign]] (string ids = urls). */
+    * [[IncrementalCC.loadAssign]] (string ids = urls).
+    *
+    * The fold contracts with the grouped union-find keyed on `block_key`
+    * ([[IncrementalCC]]'s GROUPED path) instead of the star iteration: each
+    * url has one block key and matches form only inside a block, so every
+    * component, component label and contracted edge stays inside one block
+    * — the precondition [[Linkage.entitiesFrom]] relies on for the batch
+    * path. Urls are expected to be unique across the stream (a page belongs
+    * to exactly one batch). A url that comes back anyway with changed
+    * content, and so under another block key, breaks that partition; the
+    * fold detects it on the batch that lifts a component label into two
+    * blocks and contracts that batch with the star iteration, so the
+    * maintained entities stay equal to `ConnectedComponents.run` over the
+    * accumulated matches. */
   def run(spark: SparkSession, inDir: String, stateDir: String,
           checkpoint: String, cfg: Linkage.Config = Linkage.Config(),
           compactEvery: Int = 8,
@@ -241,11 +278,9 @@ object IncrementalLinkage {
         val sp = batch.sparkSession
         gcSuperseded(stateDir, batchId)
         val prevP = loadPreparedState(sp, stateDir, batchId, cfg)
+        // d.bPrep is persisted (see delta): the batch's prepared rows feed
+        // the probe and all three writes
         val d = delta(prevP, batch.toDF(), cfg)
-        // the batch's prepared rows feed all three writes — cache for the
-        // scope of this micro-batch (cache matching is by analyzed plan, so
-        // the changed/rescored subtrees hit it too)
-        d.bPrep.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
         val live = liveBatches(stateDir, batchId)
         // count deltas SINCE the last compaction base (the base itself is a
@@ -266,7 +301,8 @@ object IncrementalLinkage {
             .parquet(s"$stateDir/prepared_delta_$batchId")
           kept.unionByName(d.rescored).write.mode("overwrite")
             .parquet(s"$stateDir/scored_delta_$batchId")
-          val allChanged = live.map(b => sp.read.parquet(s"$stateDir/changed_$b"))
+          val allChanged = live
+            .map(b => sp.read.schema(changedSchema).parquet(s"$stateDir/changed_$b"))
             .foldLeft(d.changed)(_ unionByName _).distinct()
           allChanged.write.mode("overwrite").parquet(s"$stateDir/changed_$batchId")
           // marker LAST, atomically — a crash before this line leaves an
@@ -284,13 +320,14 @@ object IncrementalLinkage {
           // the fold sees already-folded old matches too — idempotent
           // no-ops, costing one larger contraction on those batches only.)
           IncrementalCC.persistCcStep(sp, ccDir, batchId,
-            sp.read.parquet(s"$stateDir/scored_delta_$batchId")
+            sp.read.schema(scoredSchema).parquet(s"$stateDir/scored_delta_$batchId")
               .filter(col("is_match"))
-              .select(col("url_a").as("src"), col("url_b").as("dst")),
-            stringIds = true, compactEvery)
-          graft.operators.Dedup.releaseCaches(sp)
+              .select(col("block_key"), col("url_a").as("src"), col("url_b").as("dst")),
+            stringIds = true, compactEvery, groupCol = Some("block_key"))
         }
-        d.bPrep.unpersist(false)
+        // frees this batch's session-tracked caches: d.bPrep and the fold's
+        // pinned frames (`sp` is the stream's own session)
+        graft.operators.Dedup.releaseCaches(sp)
         ()
       }
       .option("checkpointLocation", checkpoint)

@@ -30,7 +30,8 @@ class IncrementalCcSpec extends AnyFunSuite {
                           full: org.apache.spark.sql.DataFrame,
                           what: String): Unit = {
     val i = inc.persist(); val f = full.persist()
-    assert(i.except(f).count() == 0 && f.except(i).count() == 0,
+    assert(i.count() == f.count() && i.except(f).count() == 0 &&
+      f.except(i).count() == 0,
       s"$what: incremental assignment diverged from full recompute")
     i.unpersist(); f.unpersist()
   }
@@ -193,7 +194,10 @@ class IncrementalCcSpec extends AnyFunSuite {
     // assignment. Sound because linkage scoring is deterministic over
     // immutable records: a touched block re-emits its old matches verbatim
     // (a re-delivered edge is an idempotent no-op here) and never retracts
-    // one — the append-only property CC's merge-only step needs.
+    // one — the append-only property CC's merge-only step needs. Folded
+    // twice: without a group (the star iteration) and keyed on block_key
+    // (the grouped contraction the streaming driver uses); batch 1 is
+    // delivered a second time and must change nothing.
     import graft.operators.Linkage
     import graft.sources.Pages
     import graft.streaming.{IncrementalCC, IncrementalLinkage}
@@ -204,21 +208,56 @@ class IncrementalCcSpec extends AnyFunSuite {
 
     var prep = Linkage.prepare(all).limit(0)
     var scored = spark.emptyDataset[graft.operators.ScoredPair].toDF()
-    var assign = IncrementalCC.empty(
-      all.select(col("url").as("src"), col("url").as("dst")))
-    batches.foreach { b =>
+    val matches = batches.map { b =>
       val d = IncrementalLinkage.delta(prep, b)
       val dP = d.rescored.persist() // feeds both the kept-union and the fold
       prep = prep.unionByName(d.bPrep)
       scored = scored.join(d.changed, Seq("block_key"), "left_anti")
         .unionByName(dP)
-      assign = IncrementalCC.step(assign, dP.filter(col("is_match"))
-        .select(col("url_a").as("src"), col("url_b").as("dst"))
-        .localCheckpoint()).assign
+      dP.filter(col("is_match"))
+        .select(col("block_key"), col("url_a").as("src"), col("url_b").as("dst"))
+        .localCheckpoint()
     }
+    assert(matches(1).count() > 0, "re-delivered batch carries no matches")
+    val deliveries = matches :+ matches(1)
+    val start = IncrementalCC.empty(matches.head)
+
+    var st = IncrementalCC.Step(start, 0L, 0L)
+    deliveries.foreach(e => st = IncrementalCC.step(st.assign, e))
+    assert(st.labelsRetired == 0 && st.newNodes == 0,
+      "re-delivered batch changed the ungrouped fold")
+    var assign = start
+    var last: IncrementalCC.Delta = null
+    deliveries.foreach { e =>
+      last = IncrementalCC.delta(assign, e, Some("block_key"))
+      assign = IncrementalCC.applyDelta(assign, last)
+    }
+    assert(last.remap.isEmpty && last.fresh.isEmpty,
+      "re-delivered batch changed the grouped fold")
+
     val full = ConnectedComponents.run(scored.filter(col("is_match"))
       .select(col("url_a").as("src"), col("url_b").as("dst")))
-    assertEqual(assign, full, "linkage entity maintenance")
+    assertEqual(st.assign, full, "linkage entity maintenance")
+    assertEqual(assign, full, "grouped linkage entity maintenance")
+    Dedup.releaseCaches(spark)
+  }
+
+  test("grouped fold: a url re-delivered under another block key == full CC") {
+    // the grouped contraction assumes one block key per url; a re-crawled
+    // page with changed content breaks that. Here u sits in block A in batch
+    // 0 and comes back in block B in batch 1, which also grows block A, so
+    // batch 1's contracted graph holds label b under both keys. A per-block
+    // union-find alone would move b to a but leave e labelled b; the fold
+    // must detect the split and still match the full recompute.
+    val b0 = Seq(("A", "b", "u"), ("B", "a", "d")).toDF("block_key", "src", "dst")
+    val b1 = Seq(("A", "b", "u"), ("A", "u", "e"), ("B", "u", "a"))
+      .toDF("block_key", "src", "dst")
+    val assign = Seq(b0, b1).foldLeft(IncrementalCC.empty(b0)) { (a, e) =>
+      IncrementalCC.applyDelta(a, IncrementalCC.delta(a, e, Some("block_key")))
+    }
+    assertEqual(assign,
+      ConnectedComponents.run(b0.union(b1).select("src", "dst")), "re-keyed url")
+    assert(assign.select("component").distinct().as[String].collect().toSeq == Seq("a"))
     Dedup.releaseCaches(spark)
   }
 

@@ -77,6 +77,19 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("q_bucketed_join rebuilds its layout when a table or its files go missing") {
+    def rows(): Seq[String] =
+      SparkEntry.queries("q_bucketed_join")(spark, sfDir).collect().map(_.toString).toSeq
+    val first = rows()
+    val tag = sfDir.replaceAll("[^A-Za-z0-9]", "_")
+    spark.sql(s"DROP TABLE g_lineitem_b_$tag")
+    assert(rows() == first, "layout with a dropped table was not rebuilt")
+    // the tables are external: deleting a data path leaves the catalog entry
+    graft.plans.StateFs.deleteRecursive(
+      s"${System.getProperty("java.io.tmpdir")}/graft_bucketed_$tag", "orders")
+    assert(rows() == first, "layout with a deleted data path was not rebuilt")
+  }
+
   test("no quadratic join strategy anywhere in the linkage pair plan") {
     val prep = Linkage.prepare(Pages.synthesize(spark, 300).toDF())
     val p = plan(Blocking.candidatePairs(prep, "block_key", "url", Seq("norm"), 50))
